@@ -1,6 +1,6 @@
-"""Exhaustive reference-test accounting (VERDICT r5 item 3).
+"""Exhaustive reference-test accounting.
 
-Extracts every @Test from the reference's Kotlin suites and maps each to
+Lists every @Test in the reference's Kotlin suites and maps each to
 one of:
   ported  — a pytest in tests/ ports the case (auto-detected when the
             pytest cites the reference test name in backticks and the
@@ -10,23 +10,34 @@ one of:
   n/a     — outside the engine's declared scope (codegen, Jupyter/REPL,
             Kotlin-binding introspection), with a rationale
 
-Usage:  python tools/parity_matrix.py          # rewrite PARITY.md
+The list of reference tests comes from the Kotlin checkout at REF_TESTS
+when it is present, and from the committed inventory
+tools/reference_tests.json (the same (file, name) pairs in extraction
+order) otherwise. With neither, extraction raises.
+
+Usage:  python tools/parity_matrix.py          # rewrite PARITY.md (and the
+                                               # inventory, from a checkout)
         python tools/parity_matrix.py --check  # exit 1 on drift/gaps
 
-tests/test_parity_matrix.py runs --check, so a new reference test (or a
-deleted pytest citation) fails CI until it is accounted for.
+tests/test_parity_matrix.py calls build_matrix()/render() and compares
+the result with PARITY.md, so a new reference test (or a deleted pytest
+citation) fails CI until it is accounted for.
+tests/test_reference_inventory.py checks the committed inventory against
+the checkout wherever the checkout exists.
 """
 
 from __future__ import annotations
 
 import collections
 import glob
+import json
 import os
 import re
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 REF_TESTS = "/root/reference/src/test/kotlin/org/jetbrains/dataframe"
+INVENTORY = os.path.join(REPO, "tools", "reference_tests.json")
 
 # ---------------------------------------------------------------------------
 # Curated dispositions: (reference file, test name) -> (status, where/why).
@@ -415,7 +426,8 @@ DISPOSITIONS: dict[tuple[str, str], tuple[str, str]] = {
 }
 
 
-def extract_reference_tests() -> list[tuple[str, str]]:
+def parse_reference_sources() -> list[tuple[str, str]]:
+    """(file, name) of every @Test under the Kotlin checkout, in file order."""
     out = []
     for f in sorted(glob.glob(f"{REF_TESTS}/**/*.kt", recursive=True)):
         src = open(f, encoding="utf-8").read()
@@ -425,9 +437,34 @@ def extract_reference_tests() -> list[tuple[str, str]]:
         short = f.replace(REF_TESTS + "/", "")
         for a, b in names:
             n = a or b
-            if (short, n) not in [(s, x) for s, x in out]:
+            if (short, n) not in out:
                 out.append((short, n))
+    if not out:
+        raise RuntimeError(f"no @Test found in the reference checkout {REF_TESTS}")
     return out
+
+
+def load_inventory() -> list[tuple[str, str]]:
+    with open(INVENTORY, encoding="utf-8") as fh:
+        return [(f, n) for f, n in json.load(fh)]
+
+
+def format_inventory(pairs) -> str:
+    """One [file, name] pair per line, so a changed test is a one-line diff."""
+    body = ",\n".join("  " + json.dumps([f, n], ensure_ascii=False) for f, n in pairs)
+    return "[\n" + body + "\n]\n"
+
+
+def extract_reference_tests() -> list[tuple[str, str]]:
+    """The reference tests from the checkout if present, else the inventory."""
+    if os.path.isdir(REF_TESTS):
+        return parse_reference_sources()
+    if os.path.exists(INVENTORY):
+        return load_inventory()
+    raise FileNotFoundError(
+        "no reference-test inventory: neither the Kotlin checkout "
+        f"{REF_TESTS} nor the committed {INVENTORY} exists"
+    )
 
 
 def citations() -> dict[str, set[str]]:
@@ -489,6 +526,18 @@ def render(rows) -> str:
 
 
 def main():
+    check = "--check" in sys.argv
+    if os.path.isdir(REF_TESTS):
+        # the checkout is the source of truth: keep the inventory tied to it
+        extracted = parse_reference_sources()
+        if not os.path.exists(INVENTORY) or load_inventory() != extracted:
+            if check:
+                print("tools/reference_tests.json differs from the checkout — "
+                      "run: python tools/parity_matrix.py")
+                sys.exit(1)
+            with open(INVENTORY, "w", encoding="utf-8") as fh:
+                fh.write(format_inventory(extracted))
+            print(f"wrote tools/reference_tests.json: {len(extracted)} tests")
     rows, missing = build_matrix()
     if missing:
         print(f"UNACCOUNTED reference tests ({len(missing)}):")
@@ -497,7 +546,7 @@ def main():
         sys.exit(1)
     content = render(rows)
     path = os.path.join(REPO, "PARITY.md")
-    if "--check" in sys.argv:
+    if check:
         existing = open(path).read() if os.path.exists(path) else ""
         if existing != content:
             print("PARITY.md is stale — run: python tools/parity_matrix.py")
